@@ -246,9 +246,8 @@ def send_to_ingester(
     window — events that live only in ingestor memory and haven't been
     synced to the object store yet (reference send_to_ingester,
     src/utils/arrow/flight.rs:112-160). The window defaults to the ONE
-    constant `storage.store.STAGING_WINDOW_SECONDS` — a hardcoded copy
-    here silently desynchronized the fan-out gate from scan()'s
-    staging union whenever the store constant was tuned (r7 review)."""
+    constant `storage.store.STAGING_WINDOW_SECONDS` (r7 review: a
+    hardcoded copy here drifted from the store's constant)."""
     if window_seconds is None:
         from .storage.store import STAGING_WINDOW_SECONDS
 

@@ -71,6 +71,17 @@ class PreparedBatch:
     # in-memory REFERENCE_TIMESTAMP (json/flatten.rs:183-188): a
     # restart re-anchors the chunk-age window on the next first event.
     reference_ts: datetime | None = None
+    _spans: dict = field(default_factory=dict, repr=False, compare=False)
+
+    def time_span(self, col: str) -> tuple[datetime, datetime] | None:
+        """(min, max) of ``col`` over the records, or None when that
+        cannot bound them (a record without a datetime there). Cached:
+        a staged batch never changes."""
+        if col not in self._spans:
+            vals = [r.get(col) for r in self.records]
+            ok = bool(vals) and all(isinstance(v, datetime) for v in vals)
+            self._spans[col] = (min(vals), max(vals)) if ok else None
+        return self._spans[col]
 
 
 def _parse_event_time(v: Any, field_name: str) -> datetime:

@@ -100,26 +100,30 @@ class ScheduledAlert:
             return False
         return True
 
-    def evaluate(self, engine, now: datetime | None = None) -> AlertState:
-        """One rolling-window evaluation `eval_start..now`; notify
-        targets on state transition (or every trigger when
-        repeat_notifications), unless notifications are muted.
-        Serialized per alert (see _eval_mu) — the state machine's
-        read-evaluate-transition must be atomic against the concurrent
-        HTTP evaluate route."""
-        with self._eval_mu:
-            return self._evaluate_locked(engine, now)
+    def plan(self, engine, now: datetime | None = None):
+        """The evaluation query over `eval_start..now`, analyzed but not
+        run (QueryEngine.query) — a caller holding a lock to snapshot
+        the streams can release it before evaluate() runs the frame."""
+        return engine.query(self.alert.to_sql(), self.eval_start, "now", now=now)
 
-    def _evaluate_locked(self, engine, now: datetime | None = None) -> AlertState:
+    def evaluate(self, engine, planned, now: datetime | None = None) -> AlertState:
+        """One rolling-window evaluation `eval_start..now` — running the
+        ``planned`` frame from plan(); notify targets on state
+        transition (or every trigger when repeat_notifications), unless
+        notifications are muted. Serialized per alert (see _eval_mu) —
+        the state machine's read-evaluate-transition must be atomic
+        against the concurrent HTTP evaluate route."""
+        with self._eval_mu:
+            return self._evaluate_locked(engine, planned, now)
+
+    def _evaluate_locked(self, engine, planned, now: datetime | None) -> AlertState:
         prev = self.alert.state
-        # engine.execute, not query().collect(): the deadline + job-group
-        # cancel means one hung Spark job (executor loss, shuffle fetch
-        # stall) raises here and is retried next tick instead of blocking
-        # the single scheduler thread — and thus every other alert —
-        # forever (review finding)
-        row = engine.execute(
-            self.alert.to_sql(), self.eval_start, "now", now=now
-        )[0]
+        # run_with_deadline, not a bare collect(): the deadline +
+        # job-group cancel means one hung Spark job (executor loss,
+        # shuffle fetch stall) raises here and is retried next tick
+        # instead of blocking the single scheduler thread — and thus
+        # every other alert — forever (review finding)
+        row = engine.run_with_deadline(planned.collect, self.alert.to_sql()[:120])[0]
         value = float(row["agg_value"] or 0.0)
         state = self.alert.update_state(value)
         transition = state != prev
@@ -148,8 +152,12 @@ class ScheduledAlert:
 class AlertScheduler:
     """Driver-side evaluation loop over registered alerts."""
 
-    def __init__(self, engine) -> None:
+    def __init__(self, engine, plan: Callable | None = None) -> None:
+        """``plan(scheduled, now)`` returns the frame an evaluation runs
+        (ScheduledAlert.plan by default); a server passes one that
+        snapshots its stores first."""
         self.engine = engine
+        self._plan = plan or (lambda sa, now: sa.plan(engine, now))
         self._alerts: list[ScheduledAlert] = []
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
@@ -170,7 +178,7 @@ class AlertScheduler:
             # alerts disable/enable routes, modal/server.rs:367-380)
             if sa.enabled and sa.due(m) and sa in self._alerts:
                 try:
-                    sa.evaluate(self.engine, now=now)
+                    sa.evaluate(self.engine, self._plan(sa, now), now=now)
                 except Exception:  # noqa: BLE001
                     # a failing alert (e.g. referencing a dropped
                     # column) must not starve the alerts after it or

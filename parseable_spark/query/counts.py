@@ -85,7 +85,7 @@ def fast_count(
     staging rows; any boundary-straddling file forces a real scan
     (None) — the all-time manifest total must never answer a windowed
     query (review finding)."""
-    hit = engine.detect_bare_count(sql)
+    hit = engine.detect_bare_count(sql, start, end)
     if hit is None:
         return None
     stream, alias = hit
@@ -126,11 +126,10 @@ def fast_count(
                 t = ts.strftime(ISO_MICRO_FMT)
                 if (lo is None or t >= lo) and (hi is None or t < hi):
                     n += 1
-    # StructType, not a DDL string: an alias containing a backtick
-    # (SELECT COUNT(*) AS `a``b` — legal) broke the DDL parse into a
-    # 500 where the scan path would have answered (r7 review)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return engine.spark.createDataFrame(
-        [(n,)], StructType([StructField(alias, LongType(), False)])
-    )
+    # A JVM-local one-row frame: VALUES plans as a LocalTableScan,
+    # which collects without a Spark job, where createDataFrame of a
+    # Python list ran a Python-worker job per answer (the slowest part
+    # of a "fast" count). toDF, not SQL text, carries the alias, so any
+    # legal alias — even one with a backtick (r7 review) — survives; the
+    # column is a non-null LongType like the scan path's count.
+    return engine.spark.sql(f"VALUES (CAST({int(n)} AS BIGINT))").toDF(alias)

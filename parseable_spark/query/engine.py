@@ -13,7 +13,10 @@ from __future__ import annotations
 
 import re
 import threading
+import time
 import uuid
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,7 +33,9 @@ DEFAULT_SQL_TIMEOUT_SECONDS = 300.0
 # engine's, and a query that references a stream registered by a
 # DIFFERENT engine sees "table not found" rather than that tenant's
 # data (the view is dropped for the duration of analysis and restored
-# after).
+# after). The lock covers analysis only: spark.sql() fixes the analyzed
+# plan, so the returned DataFrame executes after the views are
+# restored, concurrently with other queries' analysis and execution.
 _VIEW_LOCK = threading.RLock()
 _VIEW_OWNER: dict[str, "QueryEngine"] = {}  # view name → owning engine
 
@@ -308,7 +313,8 @@ class QueryEngine:
         # relations that never touch the view registry or per-stream
         # RBAC. The engine reads data exclusively through spark.read.
         spark.conf.set("spark.sql.runSQLOnFiles", "false")
-        self._streams: dict[str, tuple[DataFrame, str]] = {}
+        # name → (frame or scan callable, time column)
+        self._streams: dict[str, tuple[DataFrame | Callable[..., DataFrame], str]] = {}
         # query() swaps shared temp views in and restores them; the
         # Flight server calls it from multiple gRPC threads, and other
         # tenants' engines share the same session catalog, so the
@@ -316,20 +322,28 @@ class QueryEngine:
         # requests read each other's time windows — or each other's
         # tenants (review findings). spark.sql() resolves views at
         # ANALYSIS (inside the lock) — executing the returned DataFrame
-        # later is safe.
+        # later, outside every lock, is safe.
         self._view_lock = _VIEW_LOCK
 
     def register_stream(
         self,
         name: str,
-        df: DataFrame,
+        df: "DataFrame | Callable[..., DataFrame]",
         time_col: str | None = None,
         tenant: str | None = None,
     ) -> None:
         """Register a stream; with a tenant, the view is namespaced
         (tenant__stream) so one SparkSession serves many tenants — the
         analog of the reference's per-tenant DataFusion schema
-        (src/query/mod.rs:122-147)."""
+        (src/query/mod.rs:122-147).
+
+        ``df`` is the stream's frame, or a scan callable
+        ``scan(start=None, end=None)`` that query() calls with the
+        request window for exactly the streams it time-filters — so
+        storage is pruned by the same decision that injects the filter
+        (a stream pruned by the window but not filtered by it would
+        answer partially). A callable stream has no view between
+        queries: query() installs one for each analysis."""
         if tenant is not None:
             from ..rbac import tenant_view_name
 
@@ -337,7 +351,27 @@ class QueryEngine:
         with self._view_lock:  # query()'s restore loop iterates _streams
             self._streams[name] = (df, time_col or self.time_col)
             _VIEW_OWNER[name.lower()] = self
-            df.createOrReplaceTempView(name)
+            self._restore_view(name)
+
+    def _restore_view(self, key: str) -> None:
+        """Between queries a stream's view is its registered frame; a
+        scan callable's view is absent (no stale snapshot to read)."""
+        src = self._streams[key][0]
+        if isinstance(src, DataFrame):
+            src.createOrReplaceTempView(key)
+        else:
+            self.spark.catalog.dropTempView(key)
+
+    def _frame(self, key: str, tr: TimeRange | None) -> DataFrame:
+        """The stream's frame for one analysis, time-filtered to ``tr``
+        when given."""
+        src, tcol = self._streams[key]
+        if not isinstance(src, DataFrame):
+            return src(tr.start, tr.end) if tr is not None else src()
+        if tr is None:
+            return src
+        lo, hi = tr.sql_literals()
+        return src.filter(f"{tcol} >= {lo} AND {tcol} < {hi}")
 
     def deregister_stream(self, name: str, tenant: str | None = None) -> None:
         """Drop a stream's registration AND its temp view. Without the
@@ -379,42 +413,50 @@ class QueryEngine:
         (ensure_read_only); SQL-on-files relations are disabled at the
         session level (see __init__)."""
         ensure_read_only(sql)
+        tr = None
+        if start is not None and end is not None:
+            tr = TimeRange.parse(start, end, now=now)
+        with self._views(sql, tr):
+            return self.spark.sql(sql)
+
+    @contextmanager
+    def _views(self, sql: str, tr: TimeRange | None):
+        """Install this engine's views of the streams ``sql`` references
+        for one analysis, time-filtered to ``tr`` unless the SQL
+        constrains a stream's time column itself, and restore the
+        catalog afterwards."""
         with self._view_lock:
-            lo = hi = None
-            if start is not None and end is not None:
-                tr = TimeRange.parse(start, end, now=now)
-                lo, hi = tr.sql_literals()
             # Spark resolves temp views case-insensitively, so the
             # lookup must too — an exact-case miss would silently
             # skip injection and return full history (review finding)
             canon = {k.lower(): k for k in self._streams}
             replaced_own: list[str] = []
             dropped_foreign: list[tuple[str, QueryEngine]] = []
-            for name in extract_table_names(sql, spark=self.spark):
-                key = canon.get(name.lower())
-                if key is not None:
-                    # install OUR view unconditionally (another tenant's
-                    # engine may have left a same-named view installed),
-                    # time-filtered unless the user constrains time
-                    df, tcol = self._streams[key]
-                    if lo is not None and not references_time_col(
-                        sql, tcol, stream=key, known_streams=set(canon)
-                    ):
-                        df = df.filter(f"{tcol} >= {lo} AND {tcol} < {hi}")
-                    df.createOrReplaceTempView(key)
-                    replaced_own.append(key)
-                    continue
-                owner = _VIEW_OWNER.get(name.lower())
-                if owner is not None and owner is not self:
-                    # a DIFFERENT engine's stream: invisible to this
-                    # tenant — drop for the analysis window so the query
-                    # fails with "table not found" instead of silently
-                    # reading the other tenant's data (cross-tenant
-                    # isolation; reference per-tenant schema resolution)
-                    self.spark.catalog.dropTempView(name)
-                    dropped_foreign.append((name, owner))
             try:
-                return self.spark.sql(sql)
+                for name in extract_table_names(sql, spark=self.spark):
+                    key = canon.get(name.lower())
+                    if key is not None:
+                        # install OUR view unconditionally (another
+                        # tenant's engine may have left a same-named view
+                        # installed), time-filtered unless the user
+                        # constrains time
+                        windowed = tr is not None and not references_time_col(
+                            sql, self._streams[key][1], stream=key, known_streams=set(canon)
+                        )
+                        replaced_own.append(key)
+                        self._frame(key, tr if windowed else None).createOrReplaceTempView(key)
+                        continue
+                    owner = _VIEW_OWNER.get(name.lower())
+                    if owner is not None and owner is not self:
+                        # a DIFFERENT engine's stream: invisible to this
+                        # tenant — drop for the analysis window so the
+                        # query fails with "table not found" instead of
+                        # silently reading the other tenant's data
+                        # (cross-tenant isolation; reference per-tenant
+                        # schema resolution)
+                        self.spark.catalog.dropTempView(name)
+                        dropped_foreign.append((name, owner))
+                yield
             finally:
                 # restore EXACTLY what this query touched (r7 review):
                 # re-installing every stream of every involved engine
@@ -424,12 +466,12 @@ class QueryEngine:
                 # until the next query — and did O(all streams) catalog
                 # writes per query under the process-global lock.
                 for key in replaced_own:
-                    self._streams[key][0].createOrReplaceTempView(key)
+                    self._restore_view(key)
                 for name, owner in dropped_foreign:
                     ocanon = {k.lower(): k for k in owner._streams}
                     okey = ocanon.get(name.lower())
                     if okey is not None and okey.lower() not in canon:
-                        owner._streams[okey][0].createOrReplaceTempView(okey)
+                        owner._restore_view(okey)
 
     def execute(
         self,
@@ -460,8 +502,10 @@ class QueryEngine:
         """Run a Spark-materializing callable inside a job group with
         the P_SQL_TIMEOUT deadline; cancel the group (interrupting
         running tasks) and raise TimeoutError on expiry. Shared by
-        execute(), the alert scheduler, and the HTTP batch query path —
-        a runaway query must not hold the server's API lock forever."""
+        execute(), the alert scheduler, Flight and the HTTP read routes,
+        which call it after releasing the server's API lock — a runaway
+        query must not pin its worker thread or Spark's task slots
+        forever."""
         sc = self.spark.sparkContext
         group = f"psq-{uuid.uuid4().hex[:12]}"
         out: dict = {}
@@ -486,7 +530,63 @@ class QueryEngine:
             raise out["err"]
         return out["val"]
 
-    def detect_bare_count(self, sql: str) -> tuple[str, str] | None:
+    def iter_with_deadline(
+        self,
+        items: Callable[[], Iterator],
+        label: str = "stream",
+        started: float | None = None,
+        timeout_seconds: float = DEFAULT_SQL_TIMEOUT_SECONDS,
+    ) -> Iterator:
+        """Drain ``items()`` — an iterator whose pulls run Spark jobs
+        (toLocalIterator) — under the P_SQL_TIMEOUT deadline counted
+        from ``started`` (a time.monotonic() stamp taken before the
+        frame's files were resolved; default: the first pull). At the
+        deadline the job group is cancelled, and no item pulled after
+        it is yielded: TimeoutError raises instead. A slow reader thus
+        never outlives the files its frame planned, which compaction,
+        retention and hot-tier eviction keep on disk for longer than
+        the deadline."""
+        deadline = (time.monotonic() if started is None else started) + timeout_seconds
+
+        def expired() -> TimeoutError:
+            return TimeoutError(f"query exceeded {timeout_seconds}s and was cancelled")
+
+        sc = self.spark.sparkContext
+        group = f"psq-{uuid.uuid4().hex[:12]}"
+        # set on the pulling thread BEFORE items() starts the iterator:
+        # the JVM thread serving toLocalIterator inherits the group
+        sc.setJobGroup(group, label[:120], interruptOnCancel=True)
+        timer = threading.Timer(
+            max(deadline - time.monotonic(), 0.0), sc.cancelJobGroup, (group,)
+        )
+        timer.daemon = True
+        timer.start()
+        it = None
+        try:
+            it = iter(items())
+            while True:
+                try:
+                    item = next(it)
+                except StopIteration:
+                    return
+                except Exception as e:  # the cancel surfaces as a Spark error
+                    if time.monotonic() >= deadline:
+                        raise expired() from e
+                    raise
+                if time.monotonic() >= deadline:
+                    raise expired()
+                yield item
+        finally:
+            timer.cancel()
+            close = getattr(it, "close", None)
+            if close is not None:
+                close()
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    def detect_bare_count(
+        self, sql: str, start=None, end=None
+    ) -> tuple[str, str] | None:
         """Plan-shape detection of `SELECT COUNT(*) FROM stream` with no
         filters/grouping — the COUNT(*) fast path trigger (reference
         is_logical_plan_count_without_filters, src/query/mod.rs:427-462:
@@ -495,7 +595,10 @@ class QueryEngine:
         Aggregate(no grouping, single count(1) expr) over an
         alias/view-wrapped leaf with nothing else (any Filter/Project in
         between disqualifies). Returns (stream_name, output_alias) when
-        the answer can come from manifest row counts without a scan."""
+        the answer can come from manifest row counts without a scan.
+        The views are installed as query() would for the ``start``..
+        ``end`` window (datetimes), so a scan callable is asked for the
+        same window the query itself would scan."""
         # the GATE must run before spark.sql(): Spark executes commands
         # (SET / DROP VIEW / CREATE TABLE AS) EAGERLY at spark.sql(),
         # so probing unvalidated SQL for its plan shape was a full
@@ -508,8 +611,14 @@ class QueryEngine:
             ensure_read_only(sql)
         except ValueError:
             return None
+        if not re.search(r"\bcount\b", sql, re.IGNORECASE):
+            # no COUNT anywhere in the text: skip the analysis pass
+            # below, which the caller pays under the server's API lock
+            return None
+        tr = TimeRange(start, end) if start is not None and end is not None else None
         try:
-            plan = self.spark.sql(sql)._jdf.queryExecution().analyzed()
+            with self._views(sql, tr):
+                plan = self.spark.sql(sql)._jdf.queryExecution().analyzed()
         except Exception:
             return None
         if plan.getClass().getSimpleName() != "Aggregate":

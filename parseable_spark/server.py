@@ -33,6 +33,7 @@ filters (ingest only appends to per-stream staging, also guarded).
 from __future__ import annotations
 
 import base64
+import functools
 import json
 import logging
 import os
@@ -143,7 +144,7 @@ class ParseableAPI:
         self._stores: dict[str, StreamStore] = {}
         self._retention: dict[str, list[dict[str, Any]]] = {}
         self.targets = TargetRegistry()
-        self.scheduler = AlertScheduler(self.engine)
+        self.scheduler = AlertScheduler(self.engine, plan=self._plan_alert)
         self._alerts: dict[str, Any] = {}
         from .rbac import Rbac
 
@@ -531,7 +532,31 @@ class ParseableAPI:
             return n
 
     # -- query (query.rs:63-77, 590-631) ------------------------------------
+    # Every read route runs in two phases. The PLAN phase holds the API
+    # lock: it snapshots the stores (manifest paths, staging rows) into
+    # DataFrames and analyzes the SQL, which fixes each plan. The EXECUTE
+    # phase (_execute) runs the Spark actions after the lock is released,
+    # so one query's execution never blocks another request — the
+    # reference likewise hands execution to a dedicated query runtime
+    # (src/query/mod.rs:91-93,150-165). A planned frame stays readable:
+    # files compaction or retention swap out are deleted only after
+    # TOMBSTONE_GRACE_SECONDS (longer than the query deadline), hot-tier
+    # evictions after a grace period, and staging frames hold their rows.
+    # Every execution is therefore bounded by the deadline — the
+    # streamed route's too (QueryEngine.iter_with_deadline).
+    def _execute(self, fn, label: str):
+        """Execute phase of a read route — call it WITHOUT the API lock:
+        run ``fn`` (the Spark actions over frames planned under the
+        lock) under the engine's P_SQL_TIMEOUT deadline; a timeout is a
+        504."""
+        try:
+            return self.engine.run_with_deadline(fn, label[:120])
+        except TimeoutError as e:
+            raise ApiError(504, str(e)) from e
+
     def _query_df(self, payload: dict[str, Any]):
+        """Plan phase of /query (caller holds the API lock): validate,
+        register a scan of each referenced stream and analyze the SQL."""
         sql = (payload.get("query") or "").strip()
         start = payload.get("startTime") or ""
         end = payload.get("endTime") or ""
@@ -541,13 +566,22 @@ class ParseableAPI:
             raise ApiError(400, "empty startTime")
         if not end:
             raise ApiError(400, "empty endTime")
-        # register the current scan (staging ∪ parquet) of the streams
-        # the SQL actually references — registering all N streams paid
+        from datetime import datetime, timezone
+
+        from .query.engine import TimeRange, extract_table_names
+
+        # one clock for the fast path and the engine's injected filter
+        # and pruned scans, so all see the same window
+        now = datetime.now(timezone.utc)
+        try:
+            tr = TimeRange.parse(start, end, now=now)
+        except ValueError as e:  # bad time range
+            raise ApiError(400, str(e)) from e
+        # register the scan (staging ∪ parquet) of the streams the SQL
+        # actually references — registering all N streams paid
         # N manifest prunes + N temp-view swaps under the API lock per
         # query touching one table (review finding). Parser-derived
         # extraction; anything unresolvable falls back to all streams.
-        from .query.engine import extract_table_names
-
         canon = {k.lower(): k for k in self._stores}
         try:
             referenced = {
@@ -559,7 +593,13 @@ class ParseableAPI:
             referenced = set()  # engine surface the real error below
         for name in referenced or self._stores:
             store = self._stores[name]
-            self.engine.register_stream(name, store.scan(), time_col=store.time_col)
+            # a scan callable: the engine prunes the manifest by the
+            # request window for exactly the streams it time-filters;
+            # the one-entry cache lets this request's fast-path probe
+            # and its query share one snapshot
+            self.engine.register_stream(
+                name, functools.lru_cache(maxsize=1)(store.scan), time_col=store.time_col
+            )
         try:
             if not self.ingestor_ports:
                 # COUNT(*) fast path (reference query.rs:186-256): a bare
@@ -570,15 +610,9 @@ class ParseableAPI:
                 # Skipped in querier mode (peer staging isn't in local
                 # manifests).
                 from .query.counts import fast_count
-                from .query.engine import TimeRange
 
-                tr = TimeRange.parse(start, end)
                 fast = fast_count(
-                    self.engine,
-                    sql,
-                    self._stores,
-                    start=tr.start.replace(tzinfo=None),
-                    end=tr.end.replace(tzinfo=None),
+                    self.engine, sql, self._stores, start=tr.start, end=tr.end
                 )
                 if fast is not None:
                     return fast
@@ -586,10 +620,8 @@ class ParseableAPI:
                 # querier mode (airplane.rs:155-184): merge fresh staging
                 # events from ingestor peers for single-stream queries
                 # whose window touches the hot period
-                from .query.engine import extract_table_names
                 from .flight import querier_query
 
-                canon = {k.lower(): k for k in self._stores}
                 streams = list(
                     dict.fromkeys(
                         canon[t.lower()]
@@ -610,17 +642,19 @@ class ParseableAPI:
                         start,
                         end,
                         ingestor_ports=self.ingestor_ports,
+                        now=now,
                         auth=self.ingestor_auth,
                     )
-            return self.engine.query(sql, start, end)
-        except ValueError as e:  # bad time range / rejected SQL
+            return self.engine.query(sql, start, end, now=now)
+        except ValueError as e:  # rejected SQL
             raise ApiError(400, str(e)) from e
 
     def query(self, payload: dict[str, Any]) -> dict | list:
-        """Batch response body (fields/sendNull honored). The collect
-        runs under the engine's P_SQL_TIMEOUT deadline — a runaway
-        query is cancelled instead of holding the API lock forever
-        (the reference applies the SQL timeout to this route too)."""
+        """Batch response body (fields/sendNull honored). Planned under
+        the API lock; the collect and serialization run after its
+        release, under the engine's P_SQL_TIMEOUT deadline — a runaway
+        query is cancelled (504) and never blocks other requests (the
+        reference applies the SQL timeout to this route too)."""
         with self._lock:
             try:
                 df = self._query_df(payload)
@@ -632,68 +666,37 @@ class ParseableAPI:
                 if type(e).__name__ == "AnalysisException":
                     raise ApiError(400, str(e).split("\n")[0]) from e
                 raise
-            try:
-                return self.engine.run_with_deadline(
-                    lambda: query_response(
-                        df,
-                        fields=bool(payload.get("fields")),
-                        send_null=bool(payload.get("sendNull")),
-                    ),
-                    (payload.get("query") or "")[:120],
-                )
-            except TimeoutError as e:
-                raise ApiError(504, str(e)) from e
-            except Exception as e:  # Spark analysis errors → client error
-                raise ApiError(400, str(e).split("\n")[0]) from e
+        try:
+            return self._execute(
+                lambda: query_response(
+                    df,
+                    fields=bool(payload.get("fields")),
+                    send_null=bool(payload.get("sendNull")),
+                ),
+                payload.get("query") or "",
+            )
+        except ApiError:
+            raise
+        except Exception as e:  # Spark execution errors → client error
+            raise ApiError(400, str(e).split("\n")[0]) from e
 
     def query_ndjson(self, payload: dict[str, Any]) -> Iterator[str]:
         """Streaming NDJSON lines. Validation and planning run eagerly
-        (so a 400 surfaces BEFORE the handler commits to a 200 chunked
-        response); the lock is held until the stream is drained — one
-        writer at a time over the shared temp views.
-
-        The returned iterator's close() releases the lock even when
-        iteration NEVER STARTED: closing an unstarted generator is a
-        no-op (its finally doesn't run), so a transport failure before
-        the first chunk (client disconnects between headers) would
-        otherwise leave the API lock held forever — wedging every
-        later request (review finding)."""
-        self._lock.acquire()
-        try:
+        under the API lock (so a 400 surfaces BEFORE the handler commits
+        to a 200 chunked response); the lines then stream from the
+        planned frame with the lock released, so a slow reader blocks
+        no other request. The stream runs under the P_SQL_TIMEOUT
+        deadline counted from before the plan resolved its files: a
+        reader past it gets TimeoutError, never lines read after the
+        grace that keeps swapped-out files on disk has run out."""
+        started = time.monotonic()
+        with self._lock:
             df = self._query_df(payload)
-        except BaseException:
-            self._lock.release()
-            raise
-
-        released = False
-
-        def release_once() -> None:
-            nonlocal released
-            if not released:
-                released = True
-                self._lock.release()
-
-        def gen() -> Iterator[str]:
-            try:
-                yield from ndjson_lines(df, send_null=bool(payload.get("sendNull")))
-            finally:
-                release_once()
-
-        class _LockedLines:
-            def __init__(self, inner) -> None:
-                self._inner = inner
-
-            def __iter__(self):
-                return self
-
-            def __next__(self) -> str:
-                return next(self._inner)
-
-            def close(self) -> None:
-                self._inner.close()  # runs gen's finally if started
-                release_once()  # and covers the never-started case
-
-        return _LockedLines(gen())
+        return self.engine.iter_with_deadline(
+            lambda: ndjson_lines(df, send_null=bool(payload.get("sendNull"))),
+            payload.get("query") or "",
+            started=started,
+        )
 
     # -- alerts + targets API (alerts.rs:210-612, targets.rs:37-160) ---------
     @staticmethod
@@ -1002,10 +1005,26 @@ class ParseableAPI:
             if alert_id not in self._alerts:
                 raise ApiError(404, f"no alert {alert_id}")
             sa = self._alerts[alert_id]
-            for name, store in self._stores.items():
-                self.engine.register_stream(name, store.scan(), time_col=store.time_col)
-            state = sa.evaluate(self.engine)
+        try:
+            state = sa.evaluate(self.engine, self._plan_alert(sa))
+        except TimeoutError as e:
+            raise ApiError(504, str(e)) from e
         return {"id": alert_id, "state": state.value}
+
+    def _plan_alert(self, sa, now=None):
+        """Plan phase of an alert evaluation, for the evaluate route and
+        the background scheduler alike: under the API lock, register a
+        fresh scan of the alert's stream (pruned by the engine to the
+        evaluation window) and analyze the alert's SQL — so a scheduled
+        evaluation reads current data, not a snapshot the last query
+        registered."""
+        with self._lock:
+            store = self._stores.get(sa.alert.stream)
+            if store is not None:
+                self.engine.register_stream(
+                    sa.alert.stream, store.scan, time_col=store.time_col
+                )
+            return sa.plan(self.engine, now=now)
 
     def update_notification_state(self, alert_id: str, body: dict[str, Any]) -> dict[str, Any]:
         """PATCH /api/v1/alerts/{id}/update_notification_state
@@ -1158,23 +1177,16 @@ class ParseableAPI:
             raise ApiError(400, str(e)) from e
         lo, hi = tr.start.replace(tzinfo=None), tr.end.replace(tzinfo=None)
         with self._lock:
-            from pyspark.sql import functions as F
-
             dfs, tcs = [], []
             for tc in cfg["tableConfigs"]:
-                store = self._stores[tc["tableName"]]
-                df = store.scan().filter(
-                    (F.col(store.time_col) >= F.lit(lo))
-                    & (F.col(store.time_col) < F.lit(hi))
-                )
-                dfs.append(df)
+                dfs.append(self._stores[tc["tableName"]].scan(lo, hi))
                 tcs.append(TableConfig(tc["tableName"], tuple(tc["selectedFields"])))
             jcs = tuple(
                 JoinCondition(j["tableName"], j["field"])
                 for j in cfg["joinConfig"]["joinConditions"]
             )
             out = correlate(dfs[0], dfs[1], tcs[0], tcs[1], jcs)
-            return [row_to_json(r) for r in out.collect()]
+        return [row_to_json(r) for r in self._execute(out.collect, f"correlation:{cid}")]
 
     # -- OIDC login (src/oidc.rs, handlers/http/oidc.rs) ---------------------
     _OIDC_STATE_TTL = 600.0  # seconds a pending login may take
@@ -1625,7 +1637,8 @@ class ParseableAPI:
             )
         except ValueError as e:
             raise ApiError(400, str(e)) from e
-        df = store.scan()
+        lo, hi = tr.start.replace(tzinfo=None), tr.end.replace(tzinfo=None)
+        df = store.scan(lo, hi)
         cols = set(df.columns)
         # OTel flattening names the resource attribute `service.name`
         # (otel.py separator '.'); the span helpers use service_name
@@ -1637,10 +1650,7 @@ class ParseableAPI:
             raise ApiError(
                 400, f"dataset {dataset} is not a trace dataset (missing {missing})"
             )
-        lo, hi = tr.start.replace(tzinfo=None), tr.end.replace(tzinfo=None)
-        df = df.filter(
-            (F.col(store.time_col) >= F.lit(lo)) & (F.col(store.time_col) < F.lit(hi))
-        ).filter(F.col("service_name").isNotNull())
+        df = df.filter(F.col("service_name").isNotNull())
         service = (body.get("serviceName") or "").strip()
         if body.get("serviceName") is not None and not service:
             raise ApiError(400, "serviceName must not be empty when provided")
@@ -1688,11 +1698,17 @@ class ParseableAPI:
                 if roots_only
                 else spans
             )
-            count = tr_mod.trace_count(count_src, errors_only=errors_only).collect()[
-                0
-            ]["count"]
-            records = [row_to_json(r) for r in listed.collect()]
-        return {"count": count, "offset": offset, "limit": limit, "records": records}
+            counted = tr_mod.trace_count(count_src, errors_only=errors_only)
+        count_rows, rows = self._execute(
+            lambda: (counted.collect(), listed.collect()), "traces:list"
+        )
+        records = [row_to_json(r) for r in rows]
+        return {
+            "count": count_rows[0]["count"],
+            "offset": offset,
+            "limit": limit,
+            "records": records,
+        }
 
     def trace_detail_api(self, body: dict[str, Any]) -> dict[str, Any]:
         """POST /api/v1/services/traces/detail (traces.rs:256-330): the
@@ -1706,16 +1722,20 @@ class ParseableAPI:
             raise ApiError(400, "traceId must be provided")
         with self._lock:
             spans, _ = self._trace_spans(body)
-            store = self._stores[body["dataset"]]
-            records = [
-                row_to_json(r)
-                for r in tr_mod.trace_detail(spans, trace_id).collect()
-            ]
-            if not records:
-                raise ApiError(404, f"Trace not found: {trace_id}")
-            bounds = tr_mod.trace_bounds(
-                spans, trace_id, time_col=store.time_col
-            ).collect()[0]
+            time_col = self._stores[body["dataset"]].time_col
+
+        def run():
+            # trace_detail runs Spark jobs while it builds the hierarchy
+            # (edge collect, level walk): all of it belongs outside the lock
+            rows = tr_mod.trace_detail(spans, trace_id).collect()
+            if not rows:
+                return rows, None
+            return rows, tr_mod.trace_bounds(spans, trace_id, time_col=time_col).collect()[0]
+
+        rows, bounds = self._execute(run, f"traces:detail:{trace_id}")
+        if not rows:
+            raise ApiError(404, f"Trace not found: {trace_id}")
+        records = [row_to_json(r) for r in rows]
         return {
             "startTime": str(bounds["start_time"]),
             "endTime": str(bounds["end_time"]),
@@ -1727,8 +1747,6 @@ class ParseableAPI:
         of logs around an anchor timestamp — n/2 before + n/2 after via
         the engine's two-limit union (query/context.py), returned in
         ascending time order with the anchor index."""
-        from pyspark.sql import functions as F
-
         from .query.context import DIRECTION_TAG, log_context_sql
         from .query.response import row_to_json
         from .query.timerange import parse_human_time
@@ -1772,9 +1790,12 @@ class ParseableAPI:
                 half,
             )
             try:
-                rows = self.spark.sql(sql).collect()
+                # analysis resolves the view into the plan; the view can
+                # go before the frame executes
+                planned = self.spark.sql(sql)
             finally:
                 self.spark.catalog.dropTempView(view)
+        rows = self._execute(planned.collect, f"context:{dataset}")
         before = sorted(
             (r for r in rows if r[DIRECTION_TAG] == "before"),
             key=lambda r: r[store.time_col],
@@ -1915,20 +1936,21 @@ class ParseableAPI:
         limit = _int_arg(body.get("limit"), "limit", 5)
         if offset < 0 or limit <= 0:
             raise ApiError(400, "offset must be >= 0 and limit > 0")
-        with self._lock:
-            store = self._stores.get(name)
-        if store is None:
-            raise ApiError(404, f"no dataset {name}")
         from .query.field_stats import compute_field_stats
 
-        scan = store.scan()
         fields = [str(f) for f in (body.get("fields") or [])]
-        known = [f for f in fields if f in scan.columns]
-        if fields and not known:
-            return []
-        stats = compute_field_stats(
-            scan, name, fields=known or None, k=offset + limit
-        ).collect()
+        with self._lock:
+            store = self._stores.get(name)
+            if store is None:
+                raise ApiError(404, f"no dataset {name}")
+            scan = store.scan()
+            known = [f for f in fields if f in scan.columns]
+            if fields and not known:
+                return []
+            planned = compute_field_stats(
+                scan, name, fields=known or None, k=offset + limit
+            )
+        stats = self._execute(planned.collect, f"dataset_stats:{name}")
         out = []
         for r in sorted(stats, key=lambda r: r["field_name"]):
             for dv in list(r["distinct_stats"])[offset : offset + limit]:
@@ -2214,9 +2236,7 @@ class ParseableAPI:
 
         with self._lock:
             tcol = store.time_col
-            df = store.scan().filter(
-                (F.col(tcol) >= F.lit(lo)) & (F.col(tcol) < F.lit(hi))
-            )
+            df = store.scan(lo, hi)  # the window prunes the manifest
             if where:
                 df = df.filter(where)
             # microsecond offsets: SECOND-granularity truncation misbins
@@ -2229,7 +2249,7 @@ class ParseableAPI:
             ).cast("int")
             keys = [idx.alias("bin_idx"), *group_by]
             agg = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("count"))
-            rows = agg.collect()
+        rows = self._execute(agg.collect, f"counts:{stream}")
 
         def bin_times(i: int) -> tuple[str, str]:
             s = lo + timedelta(seconds=i * width_s)
@@ -2560,12 +2580,12 @@ class ParseableAPI:
         the loop continues (one bad stream must not stop the fleet's
         retention forever).
 
-        The sub-tick cadence is ≤60 s on purpose: scan()'s staging
-        union is gated to the last STAGING_WINDOW_SECONDS (300 s), so
-        acknowledged events are only fully queryable if staging reaches
-        parquet faster than that window — without a sync cadence,
-        events older than 5 minutes silently vanished from bounded
-        queries and a restart lost everything since boot."""
+        The sub-tick cadence is ≤60 s on purpose: a querier's fan-out
+        to ingestor staging is gated to the last STAGING_WINDOW_SECONDS
+        (300 s), so acknowledged events are only fully queryable
+        cluster-wide if staging reaches parquet faster than that window
+        — and without a sync cadence a restart lost everything since
+        boot."""
         import logging
         import threading
 
@@ -3161,9 +3181,9 @@ class _Handler(BaseHTTPRequestHandler):
     def _respond_chunked(self, lines: Iterator[str], extra: dict[str, str]) -> None:
         # EVERYTHING under the finally: a client that disconnects before
         # the first chunk makes send_response/end_headers raise, and the
-        # iterator (which may hold the API lock) must still be closed —
-        # query_ndjson's close() releases the lock even when iteration
-        # never started (review finding)
+        # iterator must still be closed so a started stream stops
+        # pulling partitions through the driver
+        committed = False
         try:
             self.send_response(200)
             self.send_header("Content-Type", "application/x-ndjson")
@@ -3171,10 +3191,19 @@ class _Handler(BaseHTTPRequestHandler):
             for k, v in extra.items():
                 self.send_header(k, v)
             self.end_headers()
+            committed = True
             for line in lines:
                 chunk = line.encode()
                 self.wfile.write(f"{len(chunk):x}\r\n".encode() + chunk + b"\r\n")
             self.wfile.write(b"0\r\n\r\n")
+        except Exception:
+            if not committed:
+                raise
+            # the 200 is already out (e.g. the stream hit its deadline):
+            # drop the connection WITHOUT the terminating chunk, so the
+            # client sees an incomplete body, never a clean short one
+            logging.getLogger(__name__).exception("streamed query failed")
+            self.close_connection = True
         finally:
             close = getattr(lines, "close", None)
             if close is not None:

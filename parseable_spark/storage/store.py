@@ -9,8 +9,9 @@ object-storage pipeline (SURVEY.md §2.1):
   commit (streams.rs:922-1107, object_storage.rs:1035-1280).
 - scan(): UNION of staging memtable + manifest-pruned parquet paths
   (stream_schema_provider.rs:602-753); staging is only consulted when
-  the query window touches the last STAGING_WINDOW_SECONDS
-  (:936-958).
+  the query window overlaps the staged rows' own time span (the
+  reference gates on the last STAGING_WINDOW_SECONDS, :936-958, which
+  misses hours-old staged events of a time-partitioned stream).
 - count_fast_path(): manifest row-count sums (query/mod.rs:427-462).
 - retention(): drop partitions older than N days
   (src/storage/retention.rs:58-160).
@@ -37,7 +38,9 @@ from .hottier import HotTier
 from .stats import FullStats
 from .writer import write_stream_batch
 
-STAGING_WINDOW_SECONDS = 300  # reference stream_schema_provider.rs:936-958
+# the querier's fan-out gate to ingestor staging (flight.send_to_ingester);
+# reference stream_schema_provider.rs:936-958
+STAGING_WINDOW_SECONDS = 300
 
 # Must stay > the 300 s per-query timeout (query/engine.py): nothing
 # planned against a pre-swap manifest can still be reading a tombstoned
@@ -289,6 +292,12 @@ class StreamStore:
             set(glob(os.path.join(self.data_dir, "**/*.parquet"), recursive=True)) - before
         )
         with lock:
+            # a compaction swap that lands between the two globs moves
+            # its output into data_dir too; that file is already in the
+            # manifest (the swap adds it under this lock) — adding it
+            # again would double-count its rows
+            known = {f.file_path for f in self.manifest.files}
+            new_files = [p for p in new_files if p not in known]
             storage_bytes = 0
             for p in new_files:
                 storage_bytes += self.manifest.add_file(p).file_size
@@ -329,18 +338,22 @@ class StreamStore:
         self,
         start: datetime | None = None,
         end: datetime | None = None,
-        now: datetime | None = None,
         limit: int | None = None,
     ) -> DataFrame:
-        """Union of manifest-pruned parquet + (fresh-window-gated)
-        staging memtable; time predicate applied on top so Spark also
-        does row-group pruning."""
+        """Union of manifest-pruned parquet + the staging memtable when
+        the window overlaps a staged batch; time predicate applied on
+        top so Spark also does row-group pruning.
+
+        Every file and row is resolved here, so the frame can execute
+        after the caller drops the lock it scanned under: files a later
+        compaction or retention swaps out stay on disk for
+        TOMBSTONE_GRACE_SECONDS, and the staging frame holds its rows."""
         naive = lambda d: (  # noqa: E731 — aware stamps → UTC-naive axis
             d.astimezone(timezone.utc).replace(tzinfo=None)
             if d is not None and d.tzinfo is not None
             else d
         )
-        start, end, now = naive(start), naive(end), naive(now)
+        start, end = naive(start), naive(end)
         iso = lambda d: d.strftime(ISO_MICRO_FMT) if d else None  # noqa: E731
         paths = self.manifest.prune_paths(self.time_col, iso(start), iso(end))
         if limit is not None:
@@ -349,9 +362,7 @@ class StreamStore:
             paths = self.hot_tier.resolve(paths)
         df = self._parquet_df(paths)
 
-        now = now or datetime.now(timezone.utc).replace(tzinfo=None)
-        fresh = end is None or end >= now - timedelta(seconds=STAGING_WINDOW_SECONDS)
-        if fresh and (sdf := self.staging_df()) is not None:
+        if self._staging_overlaps(start, end) and (sdf := self.staging_df()) is not None:
             # backticks: dotted field names (OTel `http.method`) must not
             # be parsed as struct access
             sdf = sdf.select(
@@ -360,11 +371,30 @@ class StreamStore:
             df = sdf if df is None else df.unionByName(sdf)
         if df is None:
             return self.spark.createDataFrame([], self._full_schema())
-        if start is not None:
-            df = df.filter(F.col(self.time_col) >= F.lit(start))
-        if end is not None:
-            df = df.filter(F.col(self.time_col) < F.lit(end))
-        return df
+        # one SQL-text filter: each Column op or datetime lit() is its
+        # own py4j round trip, and callers scan under the API lock
+        lit = "TIMESTAMP_NTZ '{:%Y-%m-%d %H:%M:%S.%f}'".format
+        bounds = [
+            *([f"`{self.time_col}` >= {lit(start)}"] if start is not None else []),
+            *([f"`{self.time_col}` < {lit(end)}"] if end is not None else []),
+        ]
+        return df.filter(" AND ".join(bounds)) if bounds else df
+
+    def _staging_overlaps(self, start: datetime | None, end: datetime | None) -> bool:
+        """Could a staged row fall in [start, end)? Decided from each
+        batch's own time span, not from the wall clock: a time-partitioned
+        stream's staged events carry their event time, which can be hours
+        old, and a window that misses every batch skips the staging frame
+        (a Python-worker job) altogether."""
+        if start is None and end is None:
+            return bool(self._staging)
+        for b in self._staging:
+            span = b.time_span(self.time_col)
+            if span is None or (
+                (start is None or span[1] >= start) and (end is None or span[0] < end)
+            ):
+                return True
+        return False
 
     def legacy_scan(self) -> DataFrame:
         """Prefix-listing fallback for data with no manifest entries —

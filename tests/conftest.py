@@ -15,7 +15,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from parseable_spark.session import get_spark
 
-    s = get_spark("tests", master="local[8]")
+    # get_spark's default master: local[SPARK_GRAFT_CPUS], else every core
+    s = get_spark("tests")
     yield s
     s.stop()
 

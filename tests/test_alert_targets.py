@@ -174,12 +174,14 @@ def test_scheduler_integration_notifies_target(spark):
     )
     sa = ScheduledAlert(alert, eval_start="10m", targets=[target])
 
-    from datetime import datetime
+    from datetime import datetime, timedelta
 
-    assert sa.evaluate(eng, now=datetime(2024, 1, 15, 12, 0)) is AlertState.TRIGGERED
+    noon = datetime(2024, 1, 15, 12, 0)
+    assert sa.evaluate(eng, sa.plan(eng, now=noon), now=noon) is AlertState.TRIGGERED
     # window moves past the event → aggregate empty → resolve
     assert (
-        sa.evaluate(eng, now=datetime(2024, 1, 15, 13, 0)) is AlertState.NOT_TRIGGERED
+        sa.evaluate(eng, sa.plan(eng, now=noon + timedelta(hours=1)), now=noon + timedelta(hours=1))
+        is AlertState.NOT_TRIGGERED
     )
     target.close()
     texts = [json.loads(c["body"])["text"] for c in rec.calls]

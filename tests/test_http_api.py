@@ -2119,14 +2119,14 @@ def test_user_role_mgmt_and_notification_state(spark, tmp_path):
         assert out["mutedUntil"] is None
         for name, store in api._stores.items():
             api.engine.register_stream(name, store.scan(), time_col=store.time_col)
-        state = sa.evaluate(api.engine)
+        state = sa.evaluate(api.engine, sa.plan(api.engine))
         assert state is AlertState.TRIGGERED  # evaluation still runs
         assert rec.transport.calls == []  # delivery muted
         # back to notify: the next transition (or repeat) delivers
         req("PATCH", "/api/v1/alerts/a9/update_notification_state",
             {"state": "notify"})
         sa.repeat_notifications = True
-        sa.evaluate(api.engine)
+        sa.evaluate(api.engine, sa.plan(api.engine))
         assert len(rec.transport.calls) == 1
         # invalid states
         for bad in ("", "whenever", "2001-01-01T00:00:00Z"):
